@@ -14,6 +14,8 @@ from torua_spark.engine import FLUSH_EVERY, ToruaEngine
 from torua_spark.plans import plan_string
 from torua_spark.sources.local import local_df
 
+from tests.joblog import JobLog
+
 
 def fnv_py(s: str) -> int:
     h = FNV_OFFSET_BASIS
@@ -274,37 +276,6 @@ def test_flushes_bound_plan_depth_and_partitions(spark, serving):
     assert sorted(e.list_keys()) == want + [f"new-{i:02d}" for i in range(20)]
     parts = e.dataframe().rdd.getNumPartitions()
     assert parts <= spark.sparkContext.defaultParallelism, parts
-
-
-class JobLog:
-    """Spark jobs by id watermark, read from the in-process status
-    store after the listener bus has delivered every event."""
-
-    def __init__(self, spark):
-        self._sc = spark.sparkContext
-
-    def _ids(self) -> list[int]:
-        self._sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        return self._sc.statusTracker().getJobIdsForGroup()
-
-    def mark(self) -> int:
-        return max(self._ids(), default=-1)
-
-    def since(self, mark: int) -> list[tuple[int, int]]:
-        """(stages run, shuffle bytes) of each job with an id above
-        ``mark``. A stage whose shuffle output is reused is skipped and
-        does not count. Under adaptive execution a shuffle map stage
-        runs as a job of its own, so shuffle bytes, not the stage
-        count, show a shuffle."""
-        store = self._sc._jsc.sc().statusStore()
-        out = []
-        for j in sorted(j for j in self._ids() if j > mark):
-            job = store.job(j)
-            ids = job.stageIds()
-            stages = [store.lastStageAttempt(ids.apply(i)) for i in range(ids.size())]
-            out.append((job.numCompletedStages(),
-                        sum(s.shuffleReadBytes() + s.shuffleWriteBytes() for s in stages)))
-        return out
 
 
 def test_serving_job_budget(spark):

@@ -69,32 +69,69 @@ def test_pagerank_vs_power_iteration(spark, sf_dir):
         assert abs(got[v] - ranks[v]) < 1e-3, (v, got[v], ranks[v])
 
 
-def test_state_modes_agree(spark, sf_dir):
+def test_state_modes_agree(spark, sf_dir, monkeypatch):
     """The broadcast and shuffle loop bodies are alternative physical
     shapes of the SAME algorithm — results must be identical, so the
-    auto threshold can move without changing any answer."""
-    from torua_spark.operators.graph import (
-        connected_components,
-        copurchase_vertex_edges,
-        pagerank,
-    )
+    broadcast budget can move without changing any answer. A zero
+    budget puts every vertex state on the shuffle join."""
+    from torua_spark.operators import graph as g
     from torua_spark.sources.catalog import load_table
 
-    edges = copurchase_vertex_edges(
+    edges = g.copurchase_vertex_edges(
         load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
     ).localCheckpoint()
-
-    cc = {
-        m: sorted(map(tuple, connected_components(edges, state_mode=m).collect()))
-        for m in ("broadcast", "chained")
+    weighted = graph_q._weighted_edges(spark, sf_dir).localCheckpoint()
+    src = graph_q.SSSP_SOURCE
+    runs = {
+        "connected_components": lambda: g.connected_components(edges),
+        "pagerank": lambda: g.pagerank(edges),
+        "shortest_paths": lambda: g.shortest_paths(edges, src, None),
+        "weighted_shortest_paths": lambda: g.weighted_shortest_paths(weighted, src, None),
+        "k_core": lambda: g.k_core(edges, 5, 8),
     }
-    assert cc["broadcast"] == cc["chained"]
 
-    pr = {
-        m: sorted(map(tuple, pagerank(edges, state_mode=m).collect()))
-        for m in ("broadcast", "chained")
-    }
-    assert pr["broadcast"] == pr["chained"]
+    def results():
+        return {n: sorted(map(tuple, f().collect())) for n, f in runs.items()}
+
+    broadcast = results()
+    assert all(broadcast.values()), broadcast  # non-vacuous
+    monkeypatch.setattr(g, "_BROADCAST_STATE_MAX_VERTICES", 0)
+    assert results() == broadcast
+
+
+# Ceiling on Spark jobs per query at sf0.001 on local[8], one entry
+# per user of the superstep kernel: a loop change that adds a job per
+# round, or a probe, shows up here first.
+GRAPH_JOB_BUDGET = {
+    "connected_components": 26,
+    "graph_pagerank": 37,
+    "graph_pagerank_weighted": 37,
+    "graph_shortest_path": 23,
+    "graph_weighted_shortest_path": 23,
+    "graph_label_propagation": 27,
+    "graph_k_core": 21,
+    "graph_shortest_path_cypher": 24,
+    "graph_shortest_path_unbounded": 31,
+    "dedup_cluster_canonical": 43,
+    "graphrag_ppr": 46,
+    "graphrag_hops": 30,
+    "vector_cluster_mutual_knn": 101,
+}
+
+
+def test_graph_job_budget(spark, sf_dir):
+    from tests.joblog import JobLog
+    from torua_spark.queries import all_queries, extra_queries
+
+    queries = {**all_queries(), **extra_queries()}
+    jobs = JobLog(spark)
+    used = {}
+    for name in GRAPH_JOB_BUDGET:
+        mark = jobs.mark()
+        queries[name](spark, sf_dir).collect()
+        used[name] = jobs.count(mark)
+    over = {n: (used[n], b) for n, b in GRAPH_JOB_BUDGET.items() if used[n] > b}
+    assert not over, (over, used)
 
 
 def test_recommend_items_matches_oracle(spark, sf_dir):

@@ -97,10 +97,31 @@ def test_text_ops_on_hostile_docs(spark):
 
 def test_graph_ops_on_empty_edges(spark):
     from torua_spark.operators import graph as g
+    from torua_spark.operators.graphrag import personalized_pagerank
 
     edges = spark.createDataFrame([], "src long, dst long")
+    weighted = spark.createDataFrame([], "src long, dst long, w long")
+    seeds = spark.createDataFrame([(1,)], "id long")
     assert g.connected_components(edges).count() == 0
     assert g.pagerank(edges).count() == 0
-    seeds = spark.createDataFrame([(1,)], "id long")
     hist = g.bfs_hop_histogram(edges, seeds, 2).collect()
     assert sum(r["n_vertices"] for r in hist if r["hops"] >= 0) == 0
+    assert g.k_core(edges).count() == 0
+    assert g.label_propagation(edges).count() == 0
+    for hops in (3, None):
+        assert g.shortest_paths(edges, 1, hops).count() == 0
+        assert g.weighted_shortest_paths(weighted, 1, hops).count() == 0
+    assert personalized_pagerank(edges, seeds).count() == 0
+    no_seeds = spark.createDataFrame([], "id long")
+    assert personalized_pagerank(edges, no_seeds).count() == 0
+
+
+def test_ppr_with_no_seeds_is_zero_restart_mass(spark):
+    """An empty seed set puts no restart mass anywhere: every score is
+    0 and the top-k falls back to the vertex-id tie-break."""
+    from torua_spark.operators.graphrag import personalized_pagerank
+
+    edges = spark.createDataFrame([(3, 1), (1, 2), (2, 3), (4, 1)], "src long, dst long")
+    no_seeds = spark.createDataFrame([], "id long")
+    got = sorted(map(tuple, personalized_pagerank(edges, no_seeds, topk=3).collect()))
+    assert got == [(1, 0.0, 1), (2, 0.0, 2), (3, 0.0, 3)]  # (vertex, score, rank)

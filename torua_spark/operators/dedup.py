@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from torua_spark.functions.text import jaccard, md5_32, tokens
 
 from torua_spark.functions.compat import round4
+from torua_spark.operators.graph import connected_components
 
 N_MINHASH = 16
 N_BANDS = 8  # 2 rows per band
@@ -540,23 +541,20 @@ def canonicalize_near_dups(documents: DataFrame, threshold: float = 0.5,
                            rounds: int = CANON_CC_ROUNDS,
                            pairs: DataFrame | None = None) -> DataFrame:
     """The step AFTER near-dup detection: group verified pairs into
-    duplicate CLUSTERS (fixed-round min-label propagation over the
-    pair graph) and pick one canonical survivor per cluster (longest
-    text, doc_id tie-break) — what a training pipeline actually ships.
+    duplicate CLUSTERS (`graph.connected_components`, min-label
+    propagation over the pair graph) and pick one canonical survivor
+    per cluster (longest text, doc_id tie-break) — what a training
+    pipeline actually ships.
 
-    The label loop runs a FIXED `rounds` count on both engines (not
-    to-convergence), so the oracle can unroll it exactly; dup clusters
-    are near-cliques with tiny diameters, making 12 rounds far past
+    `rounds` is the label loop's ceiling; the oracle unrolls exactly
+    `rounds` rounds. Labels do not change past the fixpoint, so the
+    loop stopping there gives the same answer; dup clusters are
+    near-cliques with tiny diameters, making 12 rounds far past
     fixpoint in practice. The pair graph is orders of magnitude
     smaller than the corpus — the loop's tables are (dup-doc, label)
     only, never corpus-wide.
 
     Returns (cluster, n_docs, canonical_doc, chars_dropped)."""
-    from torua_spark.operators.graph import (
-        _iteration_partitions,
-        _use_broadcast_state,
-    )
-
     # ``pairs``: pass a precomputed/persisted (doc_a, doc_b) relation
     # to share the detection tier with other consumers (CorpusPipeline
     # materializes it once for cluster + membership use).
@@ -566,34 +564,12 @@ def canonicalize_near_dups(documents: DataFrame, threshold: float = 0.5,
             .select("doc_a", "doc_b")
             .localCheckpoint()
         )
-    und = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).unionByName(
-        pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-    ).localCheckpoint()
-    n_und = und.count()
-    # The pair graph is dup-docs only — usually minuscule next to the
-    # corpus, so the label loop gets loop-sized shuffle partitions and
-    # (while the label state fits the broadcast budget) a chained
-    # BroadcastExchange loop body, same regime logic as graph.py.
-    with _iteration_partitions(und, n_und):
-        labels = (
-            und.select(F.col("a").alias("id"))
-            .distinct()
-            .withColumn("label", F.col("id"))
-            .localCheckpoint()
-        )
-        bcast = _use_broadcast_state("auto", n_und, labels.count())
-        for _ in range(rounds):
-            state = F.broadcast(labels) if bcast else labels
-            msgs = und.join(state, und.a == state.id).select(
-                F.col("b").alias("id"), F.col("label")
-            )
-            labels = (
-                msgs.unionByName(labels.select("id", "label"))
-                .groupBy("id")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=False)
-            )
-        labels = labels.localCheckpoint(eager=True)
+    # No dedup shuffle: a duplicate edge only repeats an idempotent
+    # min-label message.
+    labels = connected_components(
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+        max_iter=rounds, undirected_dedup=False,
+    ).select(F.col("vertex").alias("id"), F.col("component").alias("label"))
     mem = labels.join(
         documents.select(F.col("doc_id").alias("id"), "n_chars"), "id"
     )

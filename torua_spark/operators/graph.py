@@ -6,9 +6,10 @@ The reference's design stores vertices hashed across shards with edges
 co-located at their source vertex. The Spark realization: vertex and
 edge DataFrames, traversal = self-joins on dst=src, co-location =
 repartition on src (the analog of torua's edge placement), iterative
-algorithms (connected components, PageRank) = loops of joins with
-``localCheckpoint`` to truncate lineage each round (the Pregel pattern
-re-expressed on DataFrames, since PySpark has no GraphX binding).
+algorithms (connected components, PageRank, ...) = one superstep
+kernel, ``_iterate``, looping joins with ``localCheckpoint`` to
+truncate lineage each round (the Pregel pattern re-expressed on
+DataFrames, since PySpark has no GraphX binding).
 
 Scale notes:
 - the edge build (orders ⋈ lineitem) is a co-partitioned shuffle join
@@ -25,6 +26,7 @@ Scale notes:
 from __future__ import annotations
 
 from contextlib import contextmanager
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -32,34 +34,70 @@ from torua_spark.functions.compat import round4
 
 _ROWS_PER_PARTITION = 50_000
 
-# Iterative algorithms have two viable loop-body shapes and the right
-# one depends on the per-round STATE size (both stay lazily chained —
-# eager=False checkpoints, no per-round driver round-trip):
+# The vertex state enters each round's edge join in one of two shapes,
+# picked by the vertex count:
 #
-# - 'broadcast' — the vertex-state relation enters the edge join via a
-#   chained BroadcastExchange (F.broadcast on a lazy frame is not a
-#   collect), so neither the big static edge list nor the state is
-#   shuffled for the join; the only per-round shuffle is the message
-#   aggregation. Measured 1.5-2.5x over 'chained' on the co-purchase
-#   graph at sf0.1 (and the win grows with edge size — the edge side
-#   never moves). Each in-flight round holds one state broadcast
-#   (~16 B/vertex), so the budget bounds vertices, multiplied by the
-#   chained-round window.
-# - 'chained' — shuffle join per round; nothing is broadcast, so it is
-#   the only safe shape when the vertex state itself is huge.
-#
-# 'auto' picks broadcast whenever the state fits the budget; a
-# 1B-vertex graph falls back to 'chained', where the deployment answer
-# is an edge table bucketed on the join key.
+# - broadcast — the state relation enters the edge join via a chained
+#   BroadcastExchange (F.broadcast on a lazy frame is not a collect),
+#   so neither the big static edge list nor the state is shuffled for
+#   the join; the only per-round shuffle is the message aggregation.
+#   Measured 1.5-2.5x over the shuffle join on the co-purchase graph at
+#   sf0.1 (and the win grows with edge size — the edge side never
+#   moves). Each in-flight round holds one state broadcast (~16 B per
+#   vertex), so the budget bounds vertices.
+# - shuffle — both sides shuffle on the join key; nothing is broadcast,
+#   so it is the only safe shape when the vertex state itself is huge.
+#   A 1B-vertex graph takes it, where the deployment answer is an edge
+#   table bucketed on the join key.
 _BROADCAST_STATE_MAX_VERTICES = 8_000_000
 
 
-def _use_broadcast_state(mode: str, n_edges: int, n_vertices: int) -> bool:
-    if mode == "broadcast":
-        return True
-    if mode == "chained":
-        return False
-    return n_vertices <= _BROADCAST_STATE_MAX_VERTICES
+class _Edges(NamedTuple):
+    """An iterative operator's edge relation (columns a, b[, w]),
+    checkpointed once, with the sizes its loop is planned from."""
+
+    df: DataFrame
+    n_rows: int
+    n_vertices: int
+
+    def state(self, state: DataFrame, key: str = "a") -> DataFrame:
+        """A vertex state keyed by ``id``, renamed to the edge column
+        ``key`` and broadcast while the vertex count fits the budget."""
+        state = state.withColumnRenamed("id", key)
+        if self.n_vertices <= _BROADCAST_STATE_MAX_VERTICES:
+            return F.broadcast(state)
+        return state
+
+    def join(self, state: DataFrame, key: str = "a", how: str = "inner") -> DataFrame:
+        """Edges joined to a vertex state on ``edges.key = state.id``."""
+        return self.df.join(self.state(state, key), key, how)
+
+
+def _loop_edges(df: DataFrame, n_vertices: int | None = None) -> _Edges:
+    """Checkpoint a loop's edge relation once — the loop body must join
+    a table, not re-derive e.g. orders ⋈ lineitem every round — and
+    size it in one aggregate job. The vertex count is approximate, over
+    ``a`` (every vertex of a symmetrized graph), unless the caller
+    passes an exact one; it only picks the state's join shape."""
+    df = df.localCheckpoint()
+    stats = df.agg(F.count(F.lit(1)), F.approx_count_distinct("a")).collect()[0]
+    return _Edges(df, stats[0], stats[1] if n_vertices is None else n_vertices)
+
+
+def _undirected(edges: DataFrame, dedup: bool = True, weighted: bool = False) -> _Edges:
+    """Symmetrized edge list (a, b[, w]) prepared for a loop. ``dedup``
+    drops duplicate (a, b) pairs; a weighted list keeps the lightest.
+    ``dedup=False`` skips that shuffle over 2|E| rows — safe whenever
+    reversal cannot create a duplicate (e.g. a bipartite-encoded vertex
+    space where src and dst ids never overlap) AND the input is already
+    distinct; min/Pregel consumers stay CORRECT either way (idempotent
+    messages), duplicate edges only cost message volume per round."""
+    w = ["w"] if weighted else []
+    fwd = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"), *w)
+    out = fwd.unionByName(fwd.select(F.col("b").alias("a"), F.col("a").alias("b"), *w))
+    if dedup:
+        out = out.groupBy("a", "b").agg(F.min("w").alias("w")) if weighted else out.distinct()
+    return _loop_edges(out)
 
 
 @contextmanager
@@ -77,6 +115,48 @@ def _iteration_partitions(df: DataFrame, n_rows: int):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _iterate(edges: _Edges, state: DataFrame,
+             step: Callable[[DataFrame, int], DataFrame], rounds: int,
+             probe: Callable[[DataFrame], object] | None = None,
+             every: int = 1) -> tuple[DataFrame, bool]:
+    """The superstep loop every iterative operator runs — Pregelix's
+    vertex ⋈ messages → combine → update. ``step(state, r)`` builds
+    round r's state (1-based) from the last; the kernel owns the rest:
+
+    - shuffles are sized to the edge relation (_iteration_partitions);
+    - rounds chain through ``localCheckpoint(eager=False)``: lineage is
+      cut every round, so the plan stays O(1) deep (without it Catalyst
+      re-derives the whole lineage), and no round waits on a driver
+      round-trip. That saves round-trips, not jobs: with adaptive
+      execution on, each round's aggregation shuffle — and a broadcast
+      state's collect — runs as a Spark job of its own when the round
+      is planned;
+    - ``probe(state)``, a driver-side aggregate, runs on the initial
+      state, then every ``every`` rounds and after the last. The loop
+      stops at the first probe equal to the one before it: for a
+      monotone algorithm, an unchanged aggregate over a batch of
+      rounds witnesses the fixpoint. Rounds past the fixpoint are
+      idempotent, so batching costs at most every-1 wasted rounds.
+
+    The probe materializes the state it reads, so a probed loop ends
+    there; a fixed-count loop ends with one eager checkpoint, taken
+    while the loop partitioning is in force. Returns (state,
+    converged): ``converged`` is False only when a probed loop ran all
+    ``rounds`` without a stable probe."""
+    with _iteration_partitions(edges.df, edges.n_rows):
+        last = probe(state) if probe else None
+        for r in range(1, rounds + 1):
+            state = step(state, r).localCheckpoint(eager=False)
+            if probe and (r % every == 0 or r == rounds):
+                cur = probe(state)
+                if cur == last:
+                    return state, True
+                last = cur
+        if probe:
+            return state, False
+        return state.localCheckpoint(eager=True), True
 
 
 def copurchase_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -150,75 +230,38 @@ def triangle_pattern(customer: DataFrame, nation: DataFrame, region: DataFrame) 
     )
 
 
-def _undirected(edges: DataFrame, dedup: bool = True) -> DataFrame:
-    """Symmetrized edge list. ``dedup=False`` skips the distinct
-    shuffle over 2|E| rows — safe whenever reversal cannot create a
-    duplicate (e.g. a bipartite-encoded vertex space where src and dst
-    ids never overlap) AND the input is already distinct; min/Pregel
-    consumers stay CORRECT either way (idempotent messages), duplicate
-    edges only cost message volume per round."""
-    fwd = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    out = fwd.unionByName(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    return out.distinct() if dedup else out
-
-
 def connected_components(edges: DataFrame, max_iter: int = 25,
-                         check_every: int = 2,
-                         state_mode: str = "auto",
-                         dedup_undirected: bool = True) -> DataFrame:
+                         undirected_dedup: bool = True) -> DataFrame:
     """B6 — connected components by iterative min-label propagation.
 
     Vertices carry their own id as the initial label; each round every
     vertex takes the min of its own and its neighbors' labels; fixpoint
     = component membership with label = min vertex id in the component.
 
-    The convergence check (a label-sum aggregate) runs every
-    `check_every` rounds: the rounds in between stay LAZY (eager=False
-    checkpoints) and execute as one Spark job, so the per-round driver
-    round-trip is amortized — measured ~2x on the co-purchase graph.
-    Worst case runs check_every-1 extra (idempotent) rounds past the
-    fixpoint. Lineage is truncated with localCheckpoint (driver-local;
-    on a real cluster use rdd checkpointing to object storage for
-    fault tolerance). `state_mode` picks the loop-body join shape —
-    see _use_broadcast_state.
+    ``max_iter`` is a ceiling: labels only fall, so the loop probes the
+    label sum every 2 rounds and stops when it is unchanged (worst case
+    one idempotent round past the fixpoint). Lineage is truncated with
+    localCheckpoint (driver-local; on a real cluster use rdd
+    checkpointing to object storage for fault tolerance).
 
     Input edges must already be over a single numeric vertex-id space.
     """
-    # Materialize the (derived) edge list once — the loop body must join
-    # against a checkpointed table, not re-derive orders ⋈ lineitem ⋈
-    # distinct every iteration.
-    und = _undirected(edges, dedup=dedup_undirected).localCheckpoint()
-    n_edges = und.count()
-    with _iteration_partitions(und, n_edges):
-        labels = (
-            und.select(F.col("a").alias("id"))
-            .distinct()
-            .withColumn("label", F.col("id"))
-            .localCheckpoint()
-        )
-        n_vertices = labels.count()
-        bcast = _use_broadcast_state(state_mode, n_edges, n_vertices)
-        prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-        done = 0
-        while done < max_iter:
-            for _ in range(min(check_every, max_iter - done)):
-                state = F.broadcast(labels) if bcast else labels
-                msgs = (
-                    und.join(state, und.a == state.id)
-                    .select(F.col("b").alias("id"), F.col("label"))
-                )
-                labels = (
-                    msgs.unionByName(labels.select("id", "label"))
-                    .groupBy("id")
-                    .agg(F.min("label").alias("label"))
-                    # truncate lineage; materialized by the next check
-                    .localCheckpoint(eager=False)
-                )
-                done += 1
-            cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
+    g = _undirected(edges, undirected_dedup)
+    labels = (
+        g.df.select(F.col("a").alias("id"))
+        .distinct()
+        .withColumn("label", F.col("id"))
+        .localCheckpoint()
+    )
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        msgs = g.join(labels).select(F.col("b").alias("id"), "label")
+        return msgs.unionByName(labels).groupBy("id").agg(F.min("label").alias("label"))
+
+    labels, _ = _iterate(
+        g, labels, step, max_iter,
+        probe=lambda s: s.agg(F.sum("label")).collect()[0][0], every=2,
+    )
     return labels.select(F.col("id").alias("vertex"), F.col("label").alias("component"))
 
 
@@ -231,36 +274,31 @@ def bfs_hop_histogram(edges: DataFrame, seed_ids: DataFrame,
 
     State is the SPARSE reached set (id, hops) — rounds only touch the
     frontier's neighborhood, not the full vertex table, so early
-    rounds are proportional to the expanding ball, not |V|. Rounds are
-    chained lazily (eager=False checkpoints, one Spark job); min-
+    rounds are proportional to the expanding ball, not |V|. Min-
     aggregation makes re-discovery idempotent, the same Pregel shape
     as `connected_components`."""
-    und = _undirected(edges).localCheckpoint()
-    n_edges = und.count()
-    with _iteration_partitions(und, n_edges):
-        vertices = und.select(F.col("a").alias("id")).distinct().localCheckpoint()
-        n_vertices = vertices.count()
-        dist = (
-            seed_ids.select("id")
-            .join(vertices, "id", "left_semi")
-            .select("id", F.lit(0).cast("int").alias("hops"))
-            .localCheckpoint()
+    g = _undirected(edges)
+    vertices = g.df.select(F.col("a").alias("id")).distinct().localCheckpoint()
+    n_vertices = vertices.count()
+    dist = (
+        seed_ids.select("id")
+        .join(vertices, "id", "left_semi")
+        .select("id", F.lit(0).cast("int").alias("hops"))
+        .localCheckpoint()
+    )
+
+    def step(dist: DataFrame, _: int) -> DataFrame:
+        msgs = g.join(dist).select(
+            F.col("b").alias("id"), (F.col("hops") + F.lit(1)).alias("hops")
         )
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
-        for _ in range(max_hops):
-            state = F.broadcast(dist) if bcast else dist
-            msgs = (
-                und.join(state, und.a == state.id)
-                .select(F.col("b").alias("id"), (F.col("hops") + F.lit(1)).alias("hops"))
-            )
-            dist = (
-                msgs.unionByName(dist.select("id", "hops"))
-                .groupBy("id")
-                .agg(F.min("hops").cast("int").alias("hops"))
-                .localCheckpoint(eager=False)
-            )
-        dist = dist.localCheckpoint(eager=True)
-        n_reached = dist.count()
+        return (
+            msgs.unionByName(dist)
+            .groupBy("id")
+            .agg(F.min("hops").cast("int").alias("hops"))
+        )
+
+    dist, _ = _iterate(g, dist, step, max_hops)
+    n_reached = dist.count()
     hist = dist.groupBy("hops").agg(F.count(F.lit(1)).alias("n_vertices"))
     spark = edges.sparkSession
     unreached = spark.range(1).select(
@@ -277,8 +315,34 @@ def copurchase_vertex_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame
     return e.select((F.col("src") * 2).alias("src"), (F.col("dst") * 2 + 1).alias("dst"))
 
 
+def _rank_graph(edges: DataFrame, weight_col: str | None = None) -> tuple[DataFrame, _Edges]:
+    """A rank loop's loop-invariant inputs: the vertex set (src ∪ dst)
+    and the directed edges (a, b, w) with the out-degree folded in
+    once: w = 1/out_deg(src) — or, when ``weight_col`` is given,
+    w_ij / sum_j w_ij (rank flows in proportion to edge weight) — so
+    the loop never joins the degree relation again: one join per round
+    instead of two."""
+    # edges is usually a derived join — without this every use re-runs it
+    edges = edges.localCheckpoint()
+    vertices = (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .distinct()
+        .localCheckpoint()
+    )
+    if weight_col is None:
+        tot = edges.groupBy("src").agg(F.count(F.lit(1)).alias("t"))
+        w = F.lit(1.0) / F.col("t")
+    else:
+        tot = edges.groupBy("src").agg(F.sum(F.col(weight_col).cast("double")).alias("t"))
+        w = F.col(weight_col).cast("double") / F.col("t")
+    weighted = edges.join(tot, "src").select(
+        F.col("src").alias("a"), F.col("dst").alias("b"), w.alias("w")
+    )
+    return vertices, _loop_edges(weighted, vertices.count())
+
+
 def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
-             state_mode: str = "auto",
              weight_col: str | None = None) -> DataFrame:
     """B6 — PageRank via iterative DataFrame joins (directed edges).
 
@@ -286,91 +350,49 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
     out_degree). Vertices with no outgoing edges contribute nothing
     (classic simplified formulation). Output rounded to 4 dp.
 
-    With a fixed iteration count there is NO per-round driver
-    round-trip in either state mode: every round is an eager=False
-    checkpoint and the whole power iteration executes as one Spark job
-    when the result materializes. The 'auto' pick broadcasts the rank
-    state into the edge join while it fits the broadcast budget
-    (chained BroadcastExchange — the edge list is never shuffled
-    inside the loop; measured 1.5-2x at sf0.1), falling back to the
-    shuffle join for vertex sets past `_BROADCAST_STATE_MAX_VERTICES`.
-    """
-    # Loop-invariant inputs materialized once (edges is usually a
-    # derived join — without this every iteration re-runs it).
-    edges = edges.localCheckpoint()
-    n_edges = edges.count()
-    with _iteration_partitions(edges, n_edges):
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .distinct()
-            .localCheckpoint()
+    A fixed iteration count: no round blocks on a Spark action. The rank
+    state broadcasts into the edge join while it fits the budget
+    (the edge list is never shuffled inside the loop; measured 1.5-2x
+    at sf0.1)."""
+    vertices, g = _rank_graph(edges, weight_col)
+    # Zero-contribution rows for every vertex replace the final
+    # vertices left-join: dangling/no-inbound vertices survive the
+    # groupBy, so rank update = union + ONE aggregation shuffle.
+    zeros = vertices.select("id", F.lit(0.0).alias("c"))
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        contribs = g.join(ranks).select(
+            F.col("b").alias("id"), (F.col("rank") * F.col("w")).alias("c")
         )
-        n_vertices = vertices.count()
-        # Fold the (loop-invariant) out-degree into the edge list ONCE:
-        # each edge carries w = 1/out_deg(src) — or, when weight_col is
-        # given, w_ij / sum_j w_ij (weighted PageRank: rank flows in
-        # proportion to edge weight) — so the loop body never joins
-        # `deg` again: one join per round instead of two.
-        if weight_col is None:
-            deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-            ew = (
-                edges.join(deg, "src")
-                .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
-                .localCheckpoint()
-            )
-        else:
-            tot = edges.groupBy("src").agg(
-                F.sum(F.col(weight_col).cast("double")).alias("wsum")
-            )
-            ew = (
-                edges.join(tot, "src")
-                .select(
-                    "src", "dst",
-                    (F.col(weight_col).cast("double") / F.col("wsum")).alias("w"),
-                )
-                .localCheckpoint()
-            )
-        # Zero-contribution rows for every vertex replace the final
-        # vertices left-join: dangling/no-inbound vertices survive the
-        # groupBy, so rank update = union + ONE aggregation shuffle.
-        # No checkpoint of its own (r14): a literal projection of the
-        # already-checkpointed vertices is O(1)-deep lineage — the
-        # extra eager checkpoint was one more job and one more
-        # resident block for zero plan benefit.
-        zeros = vertices.select("id", F.lit(0.0).alias("c"))
-        bcast = _use_broadcast_state(state_mode, n_edges, n_vertices)
-        ranks = vertices.withColumn("rank", F.lit(1.0))
-        for _ in range(iterations):
-            state = F.broadcast(ranks) if bcast else ranks
-            contribs = (
-                ew.join(state, ew.src == state.id)
-                .select(F.col("dst").alias("id"), (F.col("rank") * F.col("w")).alias("c"))
-            )
-            ranks = (
-                contribs.unionByName(zeros)
-                .groupBy("id")
-                .agg(F.sum("c").alias("s"))
-                .select(
-                    "id",
-                    (F.lit(1.0 - damping) + F.lit(damping) * F.col("s")).alias("rank"),
-                )
-                # eager=False: lineage is cut every round but nothing runs
-                # until the chain is materialized below — one job for
-                # all iterations instead of one per round.
-                .localCheckpoint(eager=False)
-            )
-        # Materialize while the iteration partitioning is in force.
-        ranks = ranks.localCheckpoint(eager=True)
+        return (
+            contribs.unionByName(zeros)
+            .groupBy("id")
+            .agg(F.sum("c").alias("s"))
+            .select("id", (F.lit(1.0 - damping) + F.lit(damping) * F.col("s")).alias("rank"))
+        )
+
+    ranks, _ = _iterate(g, vertices.withColumn("rank", F.lit(1.0)), step, iterations)
     return ranks.select(F.col("id").alias("vertex"), round4("rank").alias("rank"))
 
 
 # Unbounded-BFS safety rail: probe for convergence every batch of
-# rounds (amortizing the count() job), and refuse to return a
+# rounds (amortizing the probe job), and refuse to return a
 # possibly-incomplete reached set if a pathological graph (a 100k-hop
 # path) is still growing at the cap — loud beats silently partial.
 SSSP_CONVERGE_BATCH = 3
 SSSP_CONVERGE_CAP = 64
+
+
+def _source_state(g: _Edges, source_id: int, **cols) -> DataFrame:
+    """The single-source loop's initial state: the source (if it has
+    an edge) with the given literal columns."""
+    return (
+        g.df.filter(F.col("a") == F.lit(source_id))
+        .select(F.col("a").alias("id"))
+        .distinct()
+        .select("id", *(c.alias(n) for n, c in cols.items()))
+        .localCheckpoint()
+    )
 
 
 def shortest_paths(edges: DataFrame, source_id: int,
@@ -394,100 +416,66 @@ def shortest_paths(edges: DataFrame, source_id: int,
     CONVERGENCE: the reached set grows by >= 1 vertex per round until
     the component is exhausted, so an unchanged count over a batch of
     rounds proves the fixpoint; the count() probe runs once per
-    SSSP_CONVERGE_BATCH rounds (amortized, graph_k_core-style), extra
-    post-fixpoint rounds are idempotent (struct-min), and a graph
-    still growing at SSSP_CONVERGE_CAP rounds raises rather than
-    return a silently partial reached set.
+    SSSP_CONVERGE_BATCH rounds, extra post-fixpoint rounds are
+    idempotent (struct-min), and a graph still growing at
+    SSSP_CONVERGE_CAP rounds raises rather than return a silently
+    partial reached set.
 
     Scale shape — same sparse-frontier Pregel skeleton as
-    `bfs_hop_histogram`: state is the reached set only, rounds are
-    lazily chained eager=False checkpoints (one Spark job total per
-    batch), the broadcast-state mode keeps the big edge list
-    unshuffled inside the loop, and message volume per round is the
-    frontier's neighborhood, not |E|. At 100 TB the edge table should
-    be bucketed on `a` so the per-round join is shuffle-free on the
-    edge side.
+    `bfs_hop_histogram`: state is the reached set only, the broadcast
+    state keeps the big edge list unshuffled inside the loop, and
+    message volume per round is the frontier's neighborhood, not |E|.
+    At 100 TB the edge table should be bucketed on `a` so the
+    per-round join is shuffle-free on the edge side.
     """
-    und = _undirected(edges, dedup=undirected_dedup).localCheckpoint()
-    # ONE stats job replaces und.count() + a materialized distinct
-    # vertex relation + its count (r14, guide §1.2: the BFS result
-    # contains only REACHED vertices, so the vertex relation was never
-    # in the output path — it existed only for its count and the
-    # source-row seed, both of which this aggregate / the filter below
-    # provide without the extra shuffle + checkpoint + jobs).
-    stats = und.agg(
-        F.count(F.lit(1)).alias("ne"),
-        F.approx_count_distinct("a").alias("nv"),
-    ).collect()[0]
-    n_edges, n_vertices = stats["ne"], stats["nv"]
-    with _iteration_partitions(und, n_edges):
-        dist = (
-            und.filter(F.col("a") == F.lit(source_id))
-            .select(F.col("a").alias("id"))
-            .distinct()
-            .select(
-                "id",
-                F.lit(0).cast("int").alias("hops"),
-                F.lit(None).cast("long").alias("via"),
-            )
-            .localCheckpoint()
+    # The result contains only REACHED vertices, so no vertex relation
+    # is built: the edge stats size the loop, the filter seeds it.
+    g = _undirected(edges, undirected_dedup)
+    dist = _source_state(
+        g, source_id, hops=F.lit(0).cast("int"), via=F.lit(None).cast("long")
+    )
+
+    def step(d: DataFrame, r: int) -> DataFrame:
+        # FRONTIER-only messages (r14, guide §2.3): only vertices
+        # first reached in the previous round send. Equivalent to
+        # all-state sends: a vertex's hops is final at first reach
+        # (BFS level order), every minimal-hops predecessor of a
+        # vertex is first reached in the SAME round, so all
+        # candidate (hops, via) messages that can win the
+        # struct-min arrive together the round after — re-sends
+        # from older vertices only duplicate messages the min
+        # already consumed. Message volume per round drops from
+        # |N(reached)| (~|E| once the component saturates) to
+        # |N(frontier)|, and the per-round broadcast ships the
+        # frontier, not the whole reached set.
+        frontier = d.filter(F.col("hops") == F.lit(r - 1))
+        msgs = g.join(frontier).select(
+            F.col("b").alias("id"),
+            (F.col("hops") + F.lit(1)).cast("int").alias("hops"),
+            F.col("a").cast("long").alias("via"),
         )
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
+        return (
+            msgs.unionByName(d)
+            .groupBy("id")
+            # struct-min = arg-min: smallest (hops, via) pair wins,
+            # making the surviving predecessor deterministic.
+            .agg(F.min(F.struct("hops", "via")).alias("s"))
+            .select("id", F.col("s.hops").alias("hops"), F.col("s.via").alias("via"))
+        )
 
-        def _round(d: DataFrame, r: int) -> DataFrame:
-            # FRONTIER-only messages (r14, guide §2.3): only vertices
-            # first reached in the previous round send. Equivalent to
-            # all-state sends: a vertex's hops is final at first reach
-            # (BFS level order), every minimal-hops predecessor of a
-            # vertex is first reached in the SAME round, so all
-            # candidate (hops, via) messages that can win the
-            # struct-min arrive together the round after — re-sends
-            # from older vertices only duplicate messages the min
-            # already consumed. Message volume per round drops from
-            # |N(reached)| (~|E| once the component saturates) to
-            # |N(frontier)|, and the per-round broadcast ships the
-            # frontier, not the whole reached set.
-            frontier = d.filter(F.col("hops") == F.lit(r - 1))
-            state = F.broadcast(frontier) if bcast else frontier
-            msgs = und.join(state, und.a == state.id).select(
-                F.col("b").alias("id"),
-                (F.col("hops") + F.lit(1)).cast("int").alias("hops"),
-                F.col("a").cast("long").alias("via"),
-            )
-            return (
-                msgs.unionByName(d.select("id", "hops", "via"))
-                .groupBy("id")
-                # struct-min = arg-min: smallest (hops, via) pair wins,
-                # making the surviving predecessor deterministic.
-                .agg(F.min(F.struct("hops", "via")).alias("s"))
-                .select("id", F.col("s.hops").alias("hops"), F.col("s.via").alias("via"))
-                .localCheckpoint(eager=False)
-            )
-
-        if max_hops is None:
-            reached = dist.count()
-            rounds = 0
-            while True:
-                for _ in range(SSSP_CONVERGE_BATCH):
-                    rounds += 1
-                    dist = _round(dist, rounds)
-                dist = dist.localCheckpoint(eager=True)
-                n = dist.count()
-                if n == reached:
-                    break  # no growth over a full batch = fixpoint
-                reached = n
-                if rounds >= SSSP_CONVERGE_CAP:
-                    raise ValueError(
-                        f"unbounded shortestPath still expanding after "
-                        f"{rounds} BFS rounds ({n} vertices reached) — "
-                        f"graph diameter exceeds SSSP_CONVERGE_CAP="
-                        f"{SSSP_CONVERGE_CAP}; pass an explicit *..k "
-                        f"bound for a partial traversal"
-                    )
-        else:
-            for r in range(1, max_hops + 1):
-                dist = _round(dist, r)
-            dist = dist.localCheckpoint(eager=True)
+    if max_hops is not None:
+        return _iterate(g, dist, step, max_hops)[0]
+    dist, converged = _iterate(
+        g, dist, step, SSSP_CONVERGE_CAP,
+        probe=lambda d: d.count(), every=SSSP_CONVERGE_BATCH,
+    )
+    if not converged:
+        raise ValueError(
+            f"unbounded shortestPath still expanding after "
+            f"{SSSP_CONVERGE_CAP} BFS rounds — graph diameter exceeds "
+            f"SSSP_CONVERGE_CAP={SSSP_CONVERGE_CAP}; pass an explicit "
+            f"*..k bound for a partial traversal"
+        )
     return dist
 
 
@@ -495,28 +483,27 @@ def reconstruct_path(paths: DataFrame, target_id: int) -> list[int]:
     """Walk `shortest_paths` predecessors from `target_id` back to the
     source; returns [source, ..., target] or [] if unreached.
 
-    The walk stays DISTRIBUTED: k rounds of broadcast-joining the
-    (≤1-row) current node's `via` back into the paths relation, chained
-    lazily, then ONE collect of the k+1 path rows. Never collects the
-    reached set itself (which is O(|V|) — the predecessor relation is
-    the distributed artifact; a path is O(k) rows)."""
-    paths = paths.localCheckpoint()
-    cur = paths.filter(F.col("id") == F.lit(target_id)).localCheckpoint()
-    head = cur.collect()  # 1 row: the target (or unreached)
+    The walk stays DISTRIBUTED: a loop over the predecessor graph
+    (id -> via) whose state is the walk so far and whose frontier is
+    its newest node (a predecessor on a shortest path sits one hop
+    nearer the source), then ONE collect of the k+1 path rows. Never
+    collects the reached set itself (which is O(|V|) — the predecessor
+    relation is the distributed artifact; a path is O(k) rows)."""
+    g = _loop_edges(paths.select(F.col("id").alias("a"), F.col("via").alias("b")))
+    walk = paths.filter(F.col("id") == F.lit(target_id)).select("id", "hops").localCheckpoint()
+    head = walk.collect()  # 1 row: the target (or unreached)
     if not head:
         return []
-    chain = cur
-    for _ in range(int(head[0]["hops"])):
-        cur = (
-            paths.join(
-                F.broadcast(cur.select(F.col("via").alias("id"))), "id"
-            )
-            .select("id", "hops", "via")
-            .localCheckpoint(eager=False)
+    top = int(head[0]["hops"])
+
+    def step(walk: DataFrame, r: int) -> DataFrame:
+        frontier = walk.filter(F.col("hops") == F.lit(top - r + 1))
+        return walk.unionByName(
+            g.join(frontier).select(F.col("b").alias("id"), (F.col("hops") - 1).alias("hops"))
         )
-        chain = chain.unionByName(cur)
-    rows = chain.select("id", "hops").collect()  # k+1 rows
-    return [r["id"] for r in sorted(rows, key=lambda r: r["hops"])]
+
+    walk, _ = _iterate(g, walk, step, top)
+    return [r["id"] for r in sorted(walk.collect(), key=lambda r: r["hops"])]
 
 
 def weighted_shortest_paths(edges: DataFrame, source_id: int,
@@ -534,7 +521,10 @@ def weighted_shortest_paths(edges: DataFrame, source_id: int,
     the result against the loop-unrolled oracle (floating-point
     min-plus would tie-break on rounding noise). Full Bellman-Ford is
     `rounds = |V| - 1`; a bounded k is the weighted analog of Cypher's
-    `[*..k]` and keeps the job count fixed.
+    `[*..k]` and keeps the job count fixed. ``undirected_dedup=False``
+    skips the lightest-parallel-edge groupBy when the input is already
+    one row per (src, dst) and src/dst ids cannot collide (the
+    bipartite vertex encoding).
 
     ``rounds=None`` (round 9 — the weighted twin of
     ``shortest_paths(max_hops=None)``) runs to CONVERGENCE. The BFS
@@ -552,118 +542,67 @@ def weighted_shortest_paths(edges: DataFrame, source_id: int,
     catches a negative-cycle input loudly instead of looping).
 
     Scale shape: identical to `shortest_paths` — sparse state, one
-    aggregation shuffle per round, lazily chained checkpoints, the
-    edge list never re-shuffled in broadcast-state mode."""
-    und = edges.select(
-        F.col("src").alias("a"), F.col("dst").alias("b"), "w"
-    ).unionByName(
-        edges.select(F.col("dst").alias("a"), F.col("src").alias("b"), "w")
+    aggregation shuffle per round, the edge list never re-shuffled
+    while the state broadcasts."""
+    g = _undirected(edges, undirected_dedup, weighted=True)
+    dist = _source_state(
+        g, source_id, dist=F.lit(0).cast("long"), via=F.lit(None).cast("long"),
+        act=F.lit(True),
     )
-    if undirected_dedup:
-        # parallel edges: keep the lightest. ``undirected_dedup=False``
-        # skips this shuffle when the caller's input is already one row
-        # per (src, dst) AND src/dst ids cannot collide (the bipartite
-        # vertex encoding) — reversal then cannot create a duplicate
-        # (a, b), so the groupBy is the identity (r14).
-        und = und.groupBy("a", "b").agg(F.min("w").alias("w"))
-    und = und.localCheckpoint()
-    # ONE stats job replaces und.count() + the materialized vertex
-    # relation + its count (r14) — the result contains only reached
-    # vertices, and n_vertices only feeds the broadcast-mode pick.
-    stats = und.agg(
-        F.count(F.lit(1)).alias("ne"),
-        F.approx_count_distinct("a").alias("nv"),
-    ).collect()[0]
-    n_edges, n_vertices = stats["ne"], stats["nv"]
-    with _iteration_partitions(und, n_edges):
-        dist = (
-            und.filter(F.col("a") == F.lit(source_id))
-            .select(F.col("a").alias("id"))
-            .distinct()
+
+    def step(d: DataFrame, _: int) -> DataFrame:
+        # DELTA messages (r14, guide §2.3): only vertices whose
+        # (dist, via) changed last round send. Equivalent to
+        # full re-sends: a vertex that did not change would resend
+        # byte-identical messages, which are no-ops under the
+        # struct-min (its last change already delivered its
+        # current dist+w to every neighbor, and the state keeps
+        # the min of everything ever received). ``act`` marks the
+        # changed set: the winning struct differs from the best
+        # previously-held row (or the vertex is newly reached).
+        msgs = g.join(d.filter(F.col("act"))).select(
+            F.col("b").alias("id"),
+            (F.col("dist") + F.col("w")).cast("long").alias("dist"),
+            F.col("a").cast("long").alias("via"),
+            F.lit(True).alias("msg"),
+        )
+        held = d.select("id", "dist", "via", F.lit(False).alias("msg"))
+        return (
+            msgs.unionByName(held)
+            .groupBy("id")
+            .agg(
+                F.min(F.struct("dist", "via")).alias("s"),
+                F.min(F.when(~F.col("msg"), F.struct("dist", "via"))).alias("s_old"),
+            )
             .select(
                 "id",
-                F.lit(0).cast("long").alias("dist"),
-                F.lit(None).cast("long").alias("via"),
-                F.lit(True).alias("act"),
+                F.col("s.dist").alias("dist"),
+                F.col("s.via").alias("via"),
+                (F.col("s_old").isNull() | (F.col("s") < F.col("s_old"))).alias("act"),
             )
-            .localCheckpoint()
         )
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
 
-        def _round(d: DataFrame) -> DataFrame:
-            # DELTA messages (r14, guide §2.3): only vertices whose
-            # (dist, via) changed last round send. Equivalent to
-            # full re-sends: a vertex that did not change would resend
-            # byte-identical messages, which are no-ops under the
-            # struct-min (its last change already delivered its
-            # current dist+w to every neighbor, and the state keeps
-            # the min of everything ever received). ``act`` marks the
-            # changed set: the winning struct differs from the best
-            # previously-held row (or the vertex is newly reached).
-            frontier = d.filter(F.col("act"))
-            state = F.broadcast(frontier) if bcast else frontier
-            msgs = und.join(state, und.a == state.id).select(
-                F.col("b").alias("id"),
-                (F.col("dist") + F.col("w")).cast("long").alias("dist"),
-                F.col("a").cast("long").alias("via"),
-                F.lit(True).alias("msg"),
-            )
-            held = d.select(
-                "id", "dist", "via", F.lit(False).alias("msg")
-            )
-            return (
-                msgs.unionByName(held)
-                .groupBy("id")
-                .agg(
-                    F.min(F.struct("dist", "via")).alias("s"),
-                    F.min(
-                        F.when(~F.col("msg"), F.struct("dist", "via"))
-                    ).alias("s_old"),
-                )
-                .select(
-                    "id",
-                    F.col("s.dist").alias("dist"),
-                    F.col("s.via").alias("via"),
-                    (
-                        F.col("s_old").isNull()
-                        | (F.col("s") < F.col("s_old"))
-                    ).alias("act"),
-                )
-                .localCheckpoint(eager=False)
-            )
+    def fingerprint(d: DataFrame) -> tuple:
+        return tuple(d.agg(
+            F.count(F.lit(1)),
+            F.sum("dist"),
+            F.sum(F.coalesce(F.col("via"), F.lit(0))),
+        ).collect()[0])
 
-        def _fingerprint(d: DataFrame) -> tuple:
-            r = d.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("dist").alias("sd"),
-                F.sum(F.coalesce(F.col("via"), F.lit(0))).alias("sv"),
-            ).collect()[0]
-            return (r["n"], r["sd"], r["sv"])
-
-        if rounds is None:
-            prev = _fingerprint(dist)
-            done = 0
-            while True:
-                for _ in range(SSSP_CONVERGE_BATCH):
-                    dist = _round(dist)
-                done += SSSP_CONVERGE_BATCH
-                dist = dist.localCheckpoint(eager=True)
-                cur = _fingerprint(dist)
-                if cur == prev:
-                    break  # all three monotone aggregates stable = fixpoint
-                prev = cur
-                if done >= SSSP_CONVERGE_CAP:
-                    raise ValueError(
-                        f"weighted shortest paths still relaxing after "
-                        f"{done} Bellman-Ford rounds — graph diameter "
-                        f"exceeds SSSP_CONVERGE_CAP={SSSP_CONVERGE_CAP} "
-                        f"or the input has a negative cycle; pass an "
-                        f"explicit rounds bound for a partial relaxation"
-                    )
-        else:
-            for _ in range(rounds):
-                dist = _round(dist)
-            dist = dist.localCheckpoint(eager=True)
+    if rounds is not None:
+        return _iterate(g, dist, step, rounds)[0].select("id", "dist", "via")
+    dist, converged = _iterate(
+        g, dist, step, SSSP_CONVERGE_CAP,
+        probe=fingerprint, every=SSSP_CONVERGE_BATCH,
+    )
+    if not converged:
+        raise ValueError(
+            f"weighted shortest paths still relaxing after "
+            f"{SSSP_CONVERGE_CAP} Bellman-Ford rounds — graph "
+            f"diameter exceeds SSSP_CONVERGE_CAP={SSSP_CONVERGE_CAP} "
+            f"or the input has a negative cycle; pass an explicit "
+            f"rounds bound for a partial relaxation"
+        )
     # ``act`` is loop machinery, not part of the contract
     return dist.select("id", "dist", "via")
 
@@ -684,36 +623,35 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     then per-id arg-max) plus the message join — label state is one
     row per vertex, the same sparse-state scaling as the other
     iterative operators."""
-    und = _undirected(edges).localCheckpoint()
-    n_edges = und.count()
-    with _iteration_partitions(und, n_edges):
-        vertices = und.select(F.col("a").alias("id")).distinct().localCheckpoint()
-        n_vertices = vertices.count()
-        labels = vertices.select("id", F.col("id").alias("label")).localCheckpoint()
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
-        for _ in range(rounds):
-            state = F.broadcast(labels) if bcast else labels
-            votes = (
-                und.join(state, und.a == state.id)
-                .select(F.col("b").alias("id"), "label")
-                .unionByName(labels.select("id", "label"))  # self-vote
-            )
-            labels = (
-                votes.groupBy("id", "label")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .groupBy("id")
-                # arg-max (count, -label): most frequent label, ties to
-                # the smallest label value
-                .agg(F.max(F.struct(F.col("n"), (-F.col("label")).alias("neg"))).alias("s"))
-                .select("id", (-F.col("s.neg")).alias("label"))
-                .localCheckpoint(eager=False)
-            )
-        labels = labels.localCheckpoint(eager=True)
+    g = _undirected(edges)
+    labels = (
+        g.df.select(F.col("a").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("label"))
+        .localCheckpoint()
+    )
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        votes = (
+            g.join(labels)
+            .select(F.col("b").alias("id"), "label")
+            .unionByName(labels)  # self-vote
+        )
+        return (
+            votes.groupBy("id", "label")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .groupBy("id")
+            # arg-max (count, -label): most frequent label, ties to
+            # the smallest label value
+            .agg(F.max(F.struct(F.col("n"), (-F.col("label")).alias("neg"))).alias("s"))
+            .select("id", (-F.col("s.neg")).alias("label"))
+        )
+
+    labels, _ = _iterate(g, labels, step, rounds)
     return labels.select(F.col("id").alias("vertex"), F.col("label").alias("community"))
 
 
 def k_core(edges: DataFrame, k: int = 2, rounds: int = 16,
-           check_every: int = 2,
            undirected_dedup: bool = True) -> DataFrame:
     """B6 — k-core membership by synchronous peeling: each round drops
     every vertex whose degree in the INDUCED surviving subgraph is
@@ -725,50 +663,29 @@ def k_core(edges: DataFrame, k: int = 2, rounds: int = 16,
     same contract as connected_components.
 
     ``rounds`` is a CEILING, not a fixed count (r8): the loop probes
-    the alive-set size every ``check_every`` rounds (the same
-    amortized-probe discipline as connected_components — rounds in
-    between stay lazy and run as one job) and stops at the first
-    stable probe. Monotone peeling makes a stable COUNT a sound
-    fixpoint witness: membership cannot change without the count
-    dropping. Worst case runs check_every-1 idempotent extra rounds,
-    which the depth-idempotent oracle absorbs.
+    the alive-set size every 2 rounds and stops at the first stable
+    probe. Monotone peeling makes a stable COUNT a sound fixpoint
+    witness: membership cannot change without the count dropping.
+    Worst case runs one idempotent extra round, which the
+    depth-idempotent oracle absorbs.
 
     Cost per round: the alive set re-enters the edge relation as two
     semi-joins (broadcast while it fits — the same state-size logic
     as the other iterative operators) plus one degree aggregation;
-    state is one id per surviving vertex and the edge list is
-    checkpointed once. Rounds needed ~ the peeling depth (cascade
-    length), typically far below diameter."""
-    und = _undirected(edges, dedup=undirected_dedup).localCheckpoint()
-    n_edges = und.count()
-    with _iteration_partitions(und, n_edges):
-        alive = und.select(F.col("a").alias("id")).distinct().localCheckpoint()
-        n_vertices = alive.count()
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
-        deg = None
-        prev_n = n_vertices
-        done = 0
-        while done < rounds:
-            for _ in range(min(check_every, rounds - done)):
-                state = F.broadcast(alive) if bcast else alive
-                induced = und.join(
-                    state.select(F.col("id").alias("a")), "a", "left_semi"
-                ).join(state.select(F.col("id").alias("b")), "b", "left_semi")
-                deg = induced.groupBy(F.col("a").alias("id")).agg(
-                    F.count(F.lit(1)).alias("core_degree")
-                )
-                alive = (
-                    deg.filter(F.col("core_degree") >= F.lit(k))
-                    .select("id")
-                    .localCheckpoint(eager=False)
-                )
-                done += 1
-            cur_n = alive.count()
-            if cur_n == prev_n:
-                break
-            prev_n = cur_n
-        alive = alive.localCheckpoint(eager=True)
-        out = deg.join(alive, "id", "left_semi").select(
-            F.col("id").alias("vertex"), F.col("core_degree")
-        ).localCheckpoint(eager=True)
-    return out
+    state is one (id, induced degree) row per surviving vertex, so the
+    last round's state is the result. Rounds needed ~ the peeling
+    depth (cascade length), typically far below diameter."""
+    g = _undirected(edges, undirected_dedup)
+    alive = g.df.select(F.col("a").alias("id")).distinct().localCheckpoint()
+
+    def step(alive: DataFrame, _: int) -> DataFrame:
+        ids = alive.select("id")
+        induced = g.join(ids, "a", "left_semi").join(g.state(ids, "b"), "b", "left_semi")
+        return (
+            induced.groupBy(F.col("a").alias("id"))
+            .agg(F.count(F.lit(1)).alias("core_degree"))
+            .filter(F.col("core_degree") >= F.lit(k))
+        )
+
+    alive, _ = _iterate(g, alive, step, rounds, probe=lambda s: s.count(), every=2)
+    return alive.select(F.col("id").alias("vertex"), "core_degree")

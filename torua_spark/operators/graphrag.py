@@ -27,7 +27,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from torua_spark.functions.compat import round4
 from torua_spark.functions.ranking import global_topk
-from torua_spark.operators.graph import copurchase_edges
+from torua_spark.operators.graph import (
+    _iterate,
+    _rank_graph,
+    copurchase_edges,
+)
 from torua_spark.operators.similarity import brute_force_topk
 
 HOP_DECAY = 0.5
@@ -90,74 +94,52 @@ def personalized_pagerank(edges: DataFrame, seed_ids: DataFrame,
 
     r_0 = restart;  r_{k+1} = (1-d)·restart + d·Mᵀ r_k, with uniform
     restart mass 1/|seeds| on seeds present in the graph (dangling
-    mass dropped — same simplified convention as `graph.pagerank`).
+    mass dropped — same simplified convention and the same 1/out_deg
+    edge fold as `graph.pagerank`). An empty seed set is zero restart
+    mass: every score is 0.
 
-    The loop is fully CHAINED (fixed iteration count, eager=False
-    checkpoints — one Spark job, no driver round-trips) and SPARSE:
-    restart mass exists only on seeds, so the rank relation holds only
-    reached vertices (the first iterations touch seed neighborhoods,
-    not the whole graph) and each round is one edge join + one
-    union-with-restart aggregation instead of a dense
-    join/aggregate/left-join triple. While the vertex state fits the
-    broadcast budget (`graph._use_broadcast_state`) the rank relation
-    enters the edge join via a chained BroadcastExchange, so the (big,
-    checkpointed) edge list is never reshuffled inside the loop —
-    measured 2x at sf0.1; past that bound ranks shuffle on hash(src),
-    the billion-vertex-safe path. Zero-mass vertices are reattached once
-    after the loop so tie-breaks at score 0 are identical to the dense
-    formulation. Returns the top-k vertices by rounded score with
-    vertex-id tie-break."""
-    edges = edges.localCheckpoint()
-    n_edges = edges.count()
-    from torua_spark.operators.graph import _iteration_partitions
+    The loop runs a fixed iteration count on the graph superstep
+    kernel and is SPARSE: restart mass exists only on seeds, so the
+    rank relation holds only reached vertices (the first iterations
+    touch seed neighborhoods, not the whole graph) and each round is
+    one edge join + one union-with-restart aggregation instead of a
+    dense join/aggregate/left-join triple. While the vertex state fits
+    the broadcast budget the rank relation enters the edge join via a
+    chained BroadcastExchange, so the (big, checkpointed) edge list is
+    never reshuffled inside the loop — measured 2x at sf0.1; past that
+    bound ranks shuffle on hash(src), the billion-vertex-safe path.
+    Zero-mass vertices are reattached once after the loop so
+    tie-breaks at score 0 are identical to the dense formulation.
+    Returns the top-k vertices by rounded score with vertex-id
+    tie-break."""
+    vertices, g = _rank_graph(edges)
+    n_seeds = seed_ids.count()
+    # Seeds present in the graph, each carrying restart mass
+    # 1/|seeds| (dangling convention unchanged: mass of seeds
+    # absent from the edge list is dropped).
+    restart = (
+        vertices.join(F.broadcast(seed_ids.select("id")), "id", "semi")
+        .select("id", F.lit(1.0 / max(n_seeds, 1)).alias("rw"))
+        .localCheckpoint()
+    )
 
-    with _iteration_partitions(edges, n_edges):
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .distinct()
-            .localCheckpoint()
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        sums = g.join(ranks).select(
+            F.col("b").alias("id"),
+            (F.lit(damping) * F.col("rank") * F.col("w")).alias("c"),
         )
-        n_vertices = vertices.count()
-        n_seeds = seed_ids.count()
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-        ew = (
-            edges.join(deg, "src")
-            .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
-            .localCheckpoint()
-        )
-        # Seeds present in the graph, each carrying restart mass
-        # 1/|seeds| (dangling convention unchanged: mass of seeds
-        # absent from the edge list is dropped).
-        restart = (
-            vertices.join(F.broadcast(seed_ids.select("id")), "id", "semi")
-            .select("id", F.lit(1.0 / n_seeds).alias("rw"))
-            .localCheckpoint()
-        )
-        from torua_spark.operators.graph import _use_broadcast_state
-
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
-        ranks = restart.select("id", F.col("rw").alias("rank"))
-        for _ in range(iterations):
-            r = ranks.withColumnRenamed("id", "src")
-            sums = ew.join(F.broadcast(r) if bcast else r, "src").select(
-                F.col("dst").alias("id"),
-                (F.lit(damping) * F.col("rank") * F.col("w")).alias("c"),
+        return (
+            sums.unionByName(
+                restart.select("id", (F.lit(1.0 - damping) * F.col("rw")).alias("c"))
             )
-            ranks = (
-                sums.unionByName(
-                    restart.select(
-                        "id", (F.lit(1.0 - damping) * F.col("rw")).alias("c")
-                    )
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("rank"))
-                .localCheckpoint(eager=False)
-            )
-        ranks = ranks.localCheckpoint(eager=True)
-        dense = vertices.join(ranks, "id", "left").select(
-            "id", F.coalesce(F.col("rank"), F.lit(0.0)).alias("rank")
+            .groupBy("id")
+            .agg(F.sum("c").alias("rank"))
         )
+
+    ranks, _ = _iterate(g, restart.select("id", F.col("rw").alias("rank")), step, iterations)
+    dense = vertices.join(ranks, "id", "left").select(
+        "id", F.coalesce(F.col("rank"), F.lit(0.0)).alias("rank")
+    )
     scored = dense.select(
         F.col("id").alias("vertex"), round4("rank").alias("score")
     )

@@ -91,7 +91,7 @@ def q_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # dedup_undirected=False: copurchase_vertex_edges is already
+    # undirected_dedup=False: copurchase_vertex_edges is already
     # distinct and bipartite-encoded (src even, dst odd), so reversal
     # cannot create a duplicate — the 2|E| distinct shuffle is pure
     # waste here.
@@ -99,7 +99,7 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         g.copurchase_vertex_edges(
             load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
         ),
-        dedup_undirected=False,
+        undirected_dedup=False,
     )
 
 
